@@ -15,11 +15,25 @@ table is the corpus-sized side and is touched exactly once with a
 narrow equi-join. Every aggregate runs keyed on the CONCEPT key
 space, which is bounded by the ontology, not the corpus, so the
 post-join reductions are skew-free and combiner-friendly.
+
+The graph operators share three private kernels, so each decision
+lives in one place:
+
+- ``_undirected`` / ``_symmetric``: the canonical ``a < b`` edge set
+  (self-loops dropped, duplicates and direction collapsed, checkpointed
+  once) and its two-way union — used by :func:`triangle_count`,
+  :func:`edge_triangle_support`, :func:`k_core`,
+  :func:`link_prediction`, :func:`graph_summary` and :func:`k_truss`.
+- ``_triangles``: degree-ordered triangle enumeration, used by
+  :func:`triangle_count` and (through ``_edge_support``) by
+  :func:`edge_triangle_support` and :func:`k_truss`.
+- ``_rank_walk``: the fixed-iteration random-walk loop of
+  :func:`pagerank` and :func:`personalized_pagerank`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -245,32 +259,9 @@ def pagerank(
     same arithmetic. Dangling-node mass (out_deg 0) is dropped, the
     common simplification; document it if ranks must sum to 1.
 
-    Plan per iteration: one equi-join of the rank vector onto the
-    edge table (rank side is node-keyed, edge side pre-joined with
-    out-degree once, outside the loop) + one dst-keyed aggregate,
-    then a left join back onto the node set for no-in-edge nodes.
-
-    Round-6 shape (guide §2.4/§5): ``localCheckpoint`` erases a
-    DataFrame's output partitioning (``UnknownPartitioning`` on the
-    RDD scan), so the previous per-iteration checkpoints made every
-    round re-broadcast the full edge table, re-exchange + re-sort the
-    node set, and recompute + broadcast the node count. Now: the node
-    count is a driver-side scalar computed once; ``nodes`` and ``ed``
-    are ``persist()``-ed (cache preserves partitioning, so the
-    iteration joins reuse the agg/distinct exchanges); the loop builds
-    lineage lazily and only checkpoints every few rounds to keep the
-    plan bounded — a 3-iteration pagerank is ONE AQE query instead of
-    ~10 small jobs (measured sf0.1 local[32]: 6.1-9.0s -> ~2s).
+    The iteration is :func:`_rank_walk`, which documents its plan
+    shape; an empty edge table yields an empty (node, rank) frame.
     """
-    # One exchange of the edge table, total: ep is hash-partitioned on
-    # the source key and cached, so (a) the out-degree aggregate runs
-    # with NO exchange, (b) every iteration's edge join reuses the
-    # cached partitioning and only moves the rank vector. rank/out_deg
-    # is a per-NODE quantity, so the degree is attached to the rank
-    # side (|V| rows) each round instead of materializing a joined
-    # (src, dst, out_deg) edge table (|E| rows) up front. Node set =
-    # degree keys (distinct sources, free byproduct) + distinct
-    # destinations — cheaper than distinct over the 2|E| union.
     ep = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
         .repartition("_s")
@@ -279,15 +270,54 @@ def pagerank(
     deg = (
         ep.groupBy("_s").agg(F.count("*").cast("double").alias("_od")).persist()
     )
+    # Node set = degree keys (distinct sources, free byproduct) +
+    # distinct destinations — cheaper than distinct over the 2|E| union.
     nodes = (
         deg.select(F.col("_s").alias("node"))
         .unionByName(ep.select(F.col("_t").alias("node")).distinct())
         .distinct()
         .persist()
     )
-    n = float(nodes.count())  # one driver scalar, not a per-plan agg
+    # one driver scalar, not a per-plan agg; an empty graph walks no
+    # rows, so any nonzero n gives the same empty (node, rank) frame
+    n = float(nodes.count()) or 1.0
+    return _rank_walk(
+        ep, deg, nodes, F.lit(1.0 / n), F.lit((1.0 - damping) / n), damping, iters
+    )
 
-    rank = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+
+def _rank_walk(
+    ep: DataFrame,
+    deg: DataFrame,
+    nodes: DataFrame,
+    start: Column,
+    restart: Column,
+    damping: float,
+    iters: int,
+) -> DataFrame:
+    """``iters`` rounds of rank(v) <- restart + d * sum over in-edges
+    u -> v of rank(u) / out_deg(u), from rank = ``start``. ``ep`` is
+    the (_s, _t) edge table, ``deg`` the (_s, _od) out-degrees and
+    ``nodes`` the node set with a ``node`` column; ``start`` and
+    ``restart`` are column expressions over ``nodes``. Returns the
+    checkpointed (node, rank) frame and releases ``ep``, ``deg`` and
+    ``nodes``, which the caller has persisted.
+
+    Plan per round: one equi-join of the rank vector onto the edges,
+    one dst-keyed sum, and a left join back onto the node set so nodes
+    without in-edges keep their restart mass. ``ep`` is cached
+    hash-partitioned on the source key, so ``deg`` aggregates on it
+    without an exchange and every round's edge join reuses that one
+    exchange: only the rank vector moves. rank / out_deg is a per-NODE
+    quantity, so the degree joins the rank side (|V| rows) each round
+    rather than being materialized onto the edge table (|E| rows).
+    The loop builds lineage lazily — a short walk is one AQE query,
+    not a job per round — and checkpoints only every 4 rounds to bound
+    the plan, because ``localCheckpoint`` erases output partitioning
+    and would make the next round re-shuffle the edges and the node
+    set.
+    """
+    rank = nodes.select("node", start.alias("rank"))
     for i in range(iters):
         w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
             "_s", (F.col("rank") / F.col("_od")).alias("_w")
@@ -300,13 +330,9 @@ def pagerank(
         rank = nodes.join(contrib, on="node", how="left").select(
             "node",
             (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+                restart + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
             ).alias("rank"),
         )
-        # bound lineage on long runs without paying a materialization
-        # per round (checkpoint drops cached partitioning, so do it
-        # rarely, not every iteration)
         if (i + 1) % 4 == 0 and (i + 1) < iters:
             rank = rank.localCheckpoint(eager=True)
     rank = rank.localCheckpoint(eager=True)
@@ -316,36 +342,31 @@ def pagerank(
     return rank
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle counts + local clustering coefficient over an
-    undirected graph (self-loops and duplicate/reversed edges are
-    normalized away). Returns (node, degree, triangles, clustering).
-
-    The scale-critical choice is DEGREE ORDERING (Cohen 2009 /
-    Suri-Vassilvitskii "Counting Triangles and the Curse of the Last
-    Reducer"): every edge is oriented from its lower-(degree, id)
-    endpoint to the higher one, so wedges are enumerated only at each
-    triangle's LOWEST-degree vertex. A star hub of degree d receives
-    no wedge fan-out (all its edges point INTO it) — without this the
-    hub materializes d^2 candidate rows and one reducer eats the
-    whole graph; with it the wedge count is bounded by sum of
-    min-degree^2 over the orientation, the standard O(m^{3/2}) bound.
-
-    Plan: two equi-joins (wedge build + closure probe), both on node
-    keys; degree is one keyed count; everything map-side combinable.
-    """
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edge set (a, b) with a < b: self-loops
+    dropped, duplicate and reversed edges collapsed. Checkpointed
+    eagerly because every caller reads it more than once."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
-    und = (
+    return (
         e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
+
+
+def _symmetric(und: DataFrame) -> DataFrame:
+    """Both directions (a, b) and (b, a) of a canonical edge set."""
+    return und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _triangles(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree-ordered triangle enumeration over a canonical edge set
+    (see :func:`triangle_count` for why the ordering matters). Returns
+    ``(deg, tris)``: deg is (node, degree), tris has one (w, x, y) row
+    per triangle, w its lowest-(degree, id) vertex and x before y."""
+    deg = _symmetric(und).groupBy(F.col("a").alias("node")).agg(
         F.count("*").alias("degree")
     )
     # orient every edge lower-(degree, id) -> higher-(degree, id)
@@ -377,6 +398,46 @@ def triangle_count(
         oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y")),
         on=["x", "y"],
     )
+    return deg, tris
+
+
+def _edge_support(und: DataFrame) -> DataFrame:
+    """(a, b, support) for every edge of a canonical edge set: the
+    number of triangles containing it, 0 for triangle-free edges."""
+    _, tris = _triangles(und)
+    tri_edges = (
+        tris.select(F.col("w").alias("p"), F.col("x").alias("q"))
+        .unionByName(tris.select(F.col("w").alias("p"), F.col("y").alias("q")))
+        .unionByName(tris.select(F.col("x").alias("p"), F.col("y").alias("q")))
+        .select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b"))
+    )
+    support = tri_edges.groupBy("a", "b").agg(F.count("*").alias("support"))
+    return und.join(support, on=["a", "b"], how="left").select(
+        "a", "b", F.coalesce("support", F.lit(0)).cast("bigint").alias("support")
+    )
+
+
+def triangle_count(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Per-node triangle counts + local clustering coefficient over an
+    undirected graph (self-loops and duplicate/reversed edges are
+    normalized away). Returns (node, degree, triangles, clustering).
+
+    The scale-critical choice is DEGREE ORDERING (Cohen 2009 /
+    Suri-Vassilvitskii "Counting Triangles and the Curse of the Last
+    Reducer"): every edge is oriented from its lower-(degree, id)
+    endpoint to the higher one, so wedges are enumerated only at each
+    triangle's LOWEST-degree vertex. A star hub of degree d receives
+    no wedge fan-out (all its edges point INTO it) — without this the
+    hub materializes d^2 candidate rows and one reducer eats the
+    whole graph; with it the wedge count is bounded by sum of
+    min-degree^2 over the orientation, the standard O(m^{3/2}) bound.
+
+    Plan: two equi-joins (wedge build + closure probe), both on node
+    keys; degree is one keyed count; everything map-side combinable.
+    """
+    deg, tris = _triangles(_undirected(edges, src, dst))
     per_node = (
         tris.select(F.col("w").alias("node"))
         .unionByName(tris.select(F.col("x").alias("node")))
@@ -551,16 +612,9 @@ def personalized_pagerank(
     identical arithmetic; dangling mass is dropped, as in
     :func:`pagerank` (documented simplification).
 
-    Plan per iteration: identical shape to :func:`pagerank` (one
-    rank-onto-edges equi-join + one dst-keyed aggregate + a node-set
-    left join); the reset vector is a broadcast-joined flag column
-    computed once.
+    The iteration is :func:`_rank_walk`, shared with :func:`pagerank`;
+    the reset vector is a broadcast-joined flag column computed once.
     """
-    # Same round-6 shape as :func:`pagerank`: one exchange of the edge
-    # table total (hash-partitioned on the source key, cached), degree
-    # aggregate exchange-free on top of it, degree attached to the
-    # rank side per round, node set from degree keys + distinct
-    # destinations, lazy loop with a rare lineage checkpoint.
     ep = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
         .repartition("_s")
@@ -599,30 +653,9 @@ def personalized_pagerank(
         )
         .persist()
     )
-    rank = nodes.select("node", reset.alias("rank"))
-    for i in range(iters):
-        w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
-            "_s", (F.col("rank") / F.col("_od")).alias("_w")
-        )
-        contrib = (
-            ep.join(w, on="_s")
-            .groupBy(F.col("_t").alias("node"))
-            .agg(F.sum("_w").alias("_in"))
-        )
-        rank = nodes.join(contrib, on="node", how="left").select(
-            "node",
-            (
-                F.lit(1.0 - damping) * reset
-                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (i + 1) % 4 == 0 and (i + 1) < iters:
-            rank = rank.localCheckpoint(eager=True)
-    rank = rank.localCheckpoint(eager=True)
-    nodes.unpersist()
-    deg.unpersist()
-    ep.unpersist()
-    return rank
+    return _rank_walk(
+        ep, deg, nodes, reset, F.lit(1.0 - damping) * reset, damping, iters
+    )
 
 
 def hits(
@@ -733,19 +766,9 @@ def k_core(
     flattens the per-round lineage exactly as in
     :func:`~phenobert_spark.operators.closure.connected_components`.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst)
     for _ in range(iters):
-        sym = und.unionByName(
-            und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        deg = sym.groupBy(F.col("a").alias("node")).agg(
+        deg = _symmetric(und).groupBy(F.col("a").alias("node")).agg(
             F.count("*").alias("_deg")
         )
         alive = deg.filter(F.col("_deg") >= k).select("node")
@@ -755,8 +778,7 @@ def k_core(
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    return sym.groupBy(F.col("a").alias("node")).agg(
+    return _symmetric(und).groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("bigint").alias("core_degree")
     )
 
@@ -787,15 +809,8 @@ def link_prediction(
     neighbors are super-hubs — an explicit, documented recall trade.
     deg(z) >= 2 for every wedge center, so ln(deg) is never 0.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    und = _undirected(edges, src, dst)
+    sym = _symmetric(und)
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count("*").alias("_deg")
     )
@@ -924,17 +939,11 @@ def graph_summary(
     double at the final expression, so both contract engines (q145)
     evaluate identical operands. Plan: one degree aggregate + one
     broadcast of the dim-sized degree table back onto edges + a
-    single global aggregate — map-side combinable throughout.
+    single global aggregate — map-side combinable throughout. An empty
+    edge table gives one row with 0 nodes and edges and NULL
+    avg_degree, max_degree and assortativity.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = _symmetric(_undirected(edges, src, dst))
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count("*").alias("d")
     )
@@ -965,9 +974,10 @@ def graph_summary(
         "n_nodes",
         (F.col("_n") / F.lit(2)).cast("bigint").alias("n_edges"),
         # mean degree = 2E/N = |sym| / N  (_sx is Σdeg², used by r only)
-        (F.col("_n").cast("double") / F.col("n_nodes").cast("double")).alias(
-            "avg_degree"
-        ),
+        F.when(
+            F.col("n_nodes") != 0,
+            F.col("_n").cast("double") / F.col("n_nodes").cast("double"),
+        ).alias("avg_degree"),
         "max_degree",
         F.when(den != 0, num / den).alias("assortativity"),
     )
@@ -1415,55 +1425,9 @@ def edge_triangle_support(
 
     Returns (u, v, support) with u < v, sorted.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("degree"))
-    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_da"))
-    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_db"))
-    ranked = und.join(da, on="a").join(db, on="b")
-    fwd = F.struct(F.col("_da"), F.col("a")) < F.struct(F.col("_db"), F.col("b"))
-    oriented = ranked.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).localCheckpoint(eager=True)
-    o1 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("x"))
-    o2 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("y"))
-    dx = deg.select(F.col("node").alias("x"), F.col("degree").alias("_dx"))
-    dy = deg.select(F.col("node").alias("y"), F.col("degree").alias("_dy"))
-    wedges = (
-        o1.join(o2, on="w")
-        .join(dx, on="x")
-        .join(dy, on="y")
-        .filter(
-            F.struct(F.col("_dx"), F.col("x")) < F.struct(F.col("_dy"), F.col("y"))
-        )
-        .select("w", "x", "y")
-    )
-    tris = wedges.join(
-        oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y")),
-        on=["x", "y"],
-    )
-    tri_edges = (
-        tris.select(F.col("w").alias("p"), F.col("x").alias("q"))
-        .unionByName(tris.select(F.col("w").alias("p"), F.col("y").alias("q")))
-        .unionByName(tris.select(F.col("x").alias("p"), F.col("y").alias("q")))
-        .select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b"))
-    )
-    support = tri_edges.groupBy("a", "b").agg(F.count("*").alias("support"))
     return (
-        und.join(support, on=["a", "b"], how="left")
-        .select(
-            F.col("a").alias("u"),
-            F.col("b").alias("v"),
-            F.coalesce("support", F.lit(0)).cast("bigint").alias("support"),
-        )
+        _edge_support(_undirected(edges, src, dst))
+        .select(F.col("a").alias("u"), F.col("b").alias("v"), "support")
         .orderBy("u", "v")
     )
 
@@ -1480,29 +1444,23 @@ def k_truss(
     the standard cohesive-community core, stricter than k-core and
     the usual next step after :func:`triangle_count` flags dense
     regions. Iterative peel: recompute per-edge support on the
-    surviving edges (each round is the verified
-    :func:`edge_triangle_support` plan) and drop edges below k-2
-    until a fixpoint; rounds are bounded by the peel depth, each
-    strictly shrinks the edge set, and `localCheckpoint` keeps the
-    lineage flat. Returns the surviving (u, v) edges, u < v.
+    surviving edges (each round is the :func:`edge_triangle_support`
+    count, run directly on the already-canonical edge set) and drop
+    edges below k-2 until a fixpoint; rounds are bounded by the peel
+    depth, each strictly shrinks the edge set, and `localCheckpoint`
+    keeps the lineage flat. Returns the surviving (u, v) edges, u < v.
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    cur = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    cur = _undirected(edges, src, dst)
     n = cur.count()
     for _ in range(max_iters):
         if n == 0:
             break
-        sup = edge_triangle_support(cur, src="a", dst="b")
         nxt = (
-            sup.filter(F.col("support") >= k - 2)
-            .select(F.col("u").alias("a"), F.col("v").alias("b"))
+            _edge_support(cur)
+            .filter(F.col("support") >= k - 2)
+            .select("a", "b")
             .localCheckpoint(eager=True)
         )
         n_nxt = nxt.count()

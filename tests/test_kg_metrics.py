@@ -6,7 +6,8 @@ import math
 import pyspark.sql.functions as F
 import pytest
 
-from phenobert_spark.operators.closure import transitive_closure
+from phenobert_spark.operators import kg_metrics as km
+from phenobert_spark.operators.closure import connected_components, transitive_closure
 from phenobert_spark.operators.kg_metrics import (
     closure_with_self,
     concept_information_content,
@@ -922,3 +923,48 @@ def test_refine_communities_empty_edges_raises(spark):
     c = spark.createDataFrame([("a", "a")], "node string, community string")
     with pytest.raises(ValueError, match="edge"):
         refine_communities(e, c)
+
+
+# op(edges) for every graph operator, and the rows it must return on a
+# zero-row (src, dst) table
+_GRAPH_OPS = {
+    "pagerank": (lambda e: km.pagerank(e, iters=2), []),
+    "personalized_pagerank": (
+        lambda e: km.personalized_pagerank(
+            e, e.sparkSession.createDataFrame([("a",)], "node string"), iters=2
+        ),
+        [("a", pytest.approx(0.15, abs=1e-12))],
+    ),
+    "label_propagation": (lambda e: km.label_propagation(e, iters=2), []),
+    "triangle_count": (km.triangle_count, []),
+    "edge_triangle_support": (km.edge_triangle_support, []),
+    "k_core": (lambda e: km.k_core(e, k=2, iters=2), []),
+    "k_truss": (lambda e: km.k_truss(e, k=3), []),
+    "link_prediction": (km.link_prediction, []),
+    "graph_summary": (km.graph_summary, [(0, 0, None, None, None)]),
+    "hits": (lambda e: km.hits(e, iters=2), []),
+    "wl_refinement": (lambda e: km.wl_refinement(e, rounds=1), []),
+    "hyperball": (lambda e: km.hyperball(e, radius=1), []),
+    "connected_components": (connected_components, []),
+    "transitive_closure": (
+        lambda e: transitive_closure(
+            e.select(F.col("src").alias("child"), F.col("dst").alias("parent"))
+        ),
+        [],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_GRAPH_OPS))
+def test_graph_operator_on_empty_edge_table(spark, name):
+    """A zero-row edge table gives a well-typed empty (or all-NULL
+    summary) result with the same schema as a non-empty graph, not an
+    exception."""
+    op, want = _GRAPH_OPS[name]
+    small = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
+    )
+    empty = spark.createDataFrame([], "src string, dst string")
+    got = op(empty)
+    assert [tuple(r) for r in got.collect()] == want
+    assert got.schema == op(small).schema

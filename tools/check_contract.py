@@ -111,6 +111,12 @@ def main():
     import __spark_entry__ as entrymod
     from phenobert_spark.config import get_spark
 
+    qs = entrymod.queries()
+    unknown = sorted(set(only) - set(qs))
+    if unknown:
+        print("unknown queries:", unknown)
+        sys.exit(2)
+
     spark = get_spark(master="local[8]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -120,7 +126,6 @@ def main():
             c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         return c
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
