@@ -8,14 +8,21 @@ fixpoint with early termination, the standard semi-naive evaluation.
 
 Scale notes: each iteration is one shuffle on the join key; frontier
 shrinks monotonically (only NEW pairs join the next round), and
-`localCheckpoint` truncates the lineage so the plan does not grow
-exponentially with iterations.
+checkpoints truncate the lineage so the plan does not grow
+exponentially with iterations. :func:`connected_components` and
+:func:`transitive_closure` leave their caching, checkpoint cadence and
+cache release to :class:`~phenobert_spark.operators._loop.Fixpoint`;
+the other loops here checkpoint every round.
 """
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._loop import Fixpoint
 
 
 def connected_components(
@@ -40,15 +47,17 @@ def connected_components(
     practice), which is why plain hash-min is chosen over the
     alternating large-star/small-star variant (that halves iterations
     for path-shaped graphs at the cost of 2x the joins per round —
-    wrong trade here). ``localCheckpoint`` truncates lineage so the
-    plan stays flat across iterations; the per-round convergence probe
-    is one scalar hash-sum aggregate (the exact changed-row join runs
-    once, to confirm the fixed point — not every round).
+    wrong trade here). A :class:`~phenobert_spark.operators._loop.Fixpoint`
+    checkpoint every 3 rounds keeps the plan flat across iterations; the
+    per-round convergence probe is one scalar hash-sum aggregate (the
+    exact changed-row join runs once, to confirm the fixed point — not
+    every round).
 
     ``nodes``: optional (node) DataFrame for singletons that appear in
-    no edge — they come back labeled with themselves.
+    no edge — they come back labeled with themselves. Edges with a NULL
+    endpoint are dropped: a NULL is no node and joins no component.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropna()
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -59,138 +68,115 @@ def connected_components(
             .unionByName(endpoints)
             .distinct()
         )
-    labels = endpoints.select("node", F.col("node").alias("component"))
-    labels = labels.persist()
-    # sym is re-joined every iteration, always on "dst": cache it
-    # hash-partitioned on that key (round 6 — persist keeps the
-    # partitioning a localCheckpoint would erase, so each round's join
-    # reuses one exchange; the label side arrives hash(node)-
-    # partitioned from its aggregate and needs none either)
-    sym = sym.repartition("dst").persist()
-    caches = [labels, sym]
-    prev_sig = None
-    for i in range(max_iters):
-        # pull each neighbor's current label onto the node, keep the min
-        prop = sym.join(
-            labels.withColumnRenamed("node", "dst"), on="dst"
-        ).select(F.col("src").alias("node"), "component")
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        # Materialize EVERY iteration (persist + the probe below): the
-        # convergence probe and the next round's join both read
-        # new_labels — without this, each iteration executed its
-        # join+aggregate TWICE (measured 45.7s -> 14s on the 80k-doc
-        # dedup graph). persist (not checkpoint) so the aggregate's
-        # hash(node) partitioning survives into the next round's join.
-        new_labels = new_labels.persist()
-        caches.append(new_labels)
-        # persist does NOT truncate lineage, and labels feeds the next
-        # round twice (union + join) — the un-truncated logical plan
-        # doubles per round (2^i nodes: a driver-heap OOM by ~20
-        # rounds). Checkpoint every few rounds to cap the plan at a
-        # constant factor; the cost is one lost cached partitioning per
-        # checkpoint boundary, not one per round as before.
-        if (i + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        # Convergence probe: labels are per-node monotone non-increasing
-        # (min), so the label multiset is unchanged iff a hash-sum over
-        # (node, component) is — ONE scalar aggregate per round instead
-        # of a join + isEmpty. The hash-sum is a w.h.p. signal, so the
-        # fixed point is CONFIRMED with the exact changed-row join once,
-        # not every round.
-        # decimal(20,0) sum widens to decimal(30,0): no ANSI long
-        # overflow even summing 1e10 max-int64 hashes
-        sig = new_labels.agg(
-            F.sum(
-                F.xxhash64("node", "component").cast("decimal(20,0)")
-            ).alias("s"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-        if prev_sig is not None and (sig[0], sig[1]) == prev_sig:
-            changed = (
-                new_labels.join(
-                    labels.withColumnRenamed("component", "old"), on="node"
-                )
-                .filter(F.col("component") < F.col("old"))
+    with Fixpoint() as fp:
+        labels = fp.pin(endpoints.select("node", F.col("node").alias("component")))
+        # sym is re-joined every round, always on "dst"; the label side
+        # arrives hash(node)-partitioned from its aggregate
+        sym = fp.pin(sym, "dst")
+        prev_sig = None
+        # Each round's labels are cached: the convergence probe and the
+        # next round's join both read them (uncached, every round ran its
+        # join+aggregate twice: 45.7 s vs 14 s on the 80k-doc dedup
+        # graph), and a cache keeps the aggregate's hash(node)
+        # partitioning for the next join, where a checkpoint erases it.
+        # labels feeds the next round twice (union + join), so lineage
+        # doubles per round (2^i plan nodes, a driver-heap OOM by ~20
+        # rounds) until a checkpoint: every 3 rounds caps it.
+        for _ in fp.rounds(max_iters, every=3):
+            # pull each neighbor's current label onto the node, keep the min
+            prop = sym.join(
+                labels.withColumnRenamed("node", "dst"), on="dst"
+            ).select(F.col("src").alias("node"), "component")
+            new_labels = fp.carry(
+                labels.unionByName(prop)
+                .groupBy("node")
+                .agg(F.min("component").alias("component")),
+                cached=True,
             )
-            if changed.isEmpty():
-                out = new_labels.localCheckpoint(eager=True)
-                for df in caches:
-                    df.unpersist()
-                return out
-        prev_sig = (sig[0], sig[1])
-        labels = new_labels
-    # Exiting via max_iters means labels may be UNCONVERGED: a
-    # long-diameter chain would get split into multiple "components",
-    # and a dedup job built on top would keep several "canonical" docs
-    # for one true cluster with no error signal. Warn loudly — callers
-    # with legitimately deep graphs should raise max_iters.
-    import warnings
+            # Convergence probe: labels are per-node monotone non-increasing
+            # (min), so the label multiset is unchanged iff a hash-sum over
+            # (node, component) is — ONE scalar aggregate per round instead
+            # of a join + isEmpty. The hash-sum is a w.h.p. signal, so the
+            # fixed point is CONFIRMED with the exact changed-row join once,
+            # not every round.
+            # decimal(20,0) sum widens to decimal(30,0): no ANSI long
+            # overflow even summing 1e10 max-int64 hashes
+            sig = new_labels.agg(
+                F.sum(
+                    F.xxhash64("node", "component").cast("decimal(20,0)")
+                ).alias("s"),
+                F.count("*").alias("n"),
+            ).collect()[0]
+            if prev_sig is not None and (sig[0], sig[1]) == prev_sig:
+                changed = (
+                    new_labels.join(
+                        labels.withColumnRenamed("component", "old"), on="node"
+                    )
+                    .filter(F.col("component") < F.col("old"))
+                )
+                if changed.isEmpty():
+                    return fp.result(new_labels)
+            prev_sig = (sig[0], sig[1])
+            labels = new_labels
+        # Exiting via max_iters means labels may be UNCONVERGED: a
+        # long-diameter chain would get split into multiple "components",
+        # and a dedup job built on top would keep several "canonical" docs
+        # for one true cluster with no error signal. Warn loudly — callers
+        # with legitimately deep graphs should raise max_iters.
+        warnings.warn(
+            f"connected_components hit max_iters={max_iters} without "
+            "converging; returned labels may split long-diameter components",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return fp.result(labels)
 
-    warnings.warn(
-        f"connected_components hit max_iters={max_iters} without "
-        "converging; returned labels may split long-diameter components",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    out = labels.localCheckpoint(eager=True)
-    for df in caches:
-        df.unpersist()
-    return out
 
-
-def transitive_closure(
-    edges: DataFrame, max_iters: int = 30, checkpoint_every: int = 4
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     """edges(child, parent) -> closure(node, anc): all (node, ancestor)
     pairs reachable through one or more parent hops.
 
-    Round-6 shape (guide §5): every loop state (``new``, ``closure``,
-    ``up``) is ``persist()``-ed — each is consumed 2-3 times per
-    round (the emptiness probe, the anti-join, the union, the next
-    hop), and without the cache iteration i re-ran the entire lineage
-    of iterations 0..i-1 several times over. The final closure is
-    localCheckpoint-ed so every intermediate cache can be released
-    before returning."""
-    closure = edges.select(
-        F.col("child").alias("node"), F.col("parent").alias("anc")
-    ).distinct().persist()
-    frontier = closure
-    up = edges.select(
-        F.col("child").alias("_c"), F.col("parent").alias("_p")
-    ).persist()
-    cached = [closure, up]
-    for i in range(max_iters):
-        # extend the frontier one hop: (node -> anc) + (anc -> anc')
-        stepped = (
-            frontier.join(up, frontier.anc == up._c)
-            .select("node", F.col("_p").alias("anc"))
+    Every round's ``new`` and ``closure`` are cached: each is read 2-3
+    times per round (the emptiness probe, the anti-join, the union, the
+    next hop), and uncached, round i re-ran the lineage of rounds
+    0..i-1 several times over. ``closure`` feeds the next round twice
+    (anti-join + union), so its lineage doubles per round until a
+    checkpoint: every 4 rounds keeps the plan linear in depth.
+
+    Exiting through ``max_iters`` with a non-empty frontier returns an
+    incomplete closure and emits a ``RuntimeWarning``."""
+    with Fixpoint() as fp:
+        closure = fp.pin(
+            edges.select(F.col("child").alias("node"), F.col("parent").alias("anc"))
             .distinct()
         )
-        new = stepped.join(closure, on=["node", "anc"], how="left_anti")
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=True)
+        up = fp.pin(
+            edges.select(F.col("child").alias("_c"), F.col("parent").alias("_p"))
+        )
+        frontier = closure
+        for _ in fp.rounds(max_iters, every=4):
+            # extend the frontier one hop: (node -> anc) + (anc -> anc')
+            stepped = (
+                frontier.join(up, frontier.anc == up._c)
+                .select("node", F.col("_p").alias("anc"))
+                .distinct()
+            )
+            new = fp.carry(
+                stepped.join(closure, on=["node", "anc"], how="left_anti"),
+                cached=True,
+            )
+            if new.isEmpty():
+                break
+            closure = fp.carry(closure.unionByName(new).distinct(), cached=True)
+            frontier = new
         else:
-            new = new.persist()
-            cached.append(new)
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new).distinct().persist()
-        cached.append(closure)
-        # closure feeds the next round twice (anti-join + union) and
-        # persist does not truncate lineage — checkpoint on the same
-        # cadence as `new` so the logical plan stays linear in depth
-        # rather than doubling per round
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            closure = closure.localCheckpoint(eager=True)
-        frontier = new
-    out = closure.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
+            warnings.warn(
+                f"transitive_closure hit max_iters={max_iters} with a "
+                "non-empty frontier; the returned closure may be incomplete",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        return fp.result(closure)
 
 
 def transitive_reduction(

@@ -177,6 +177,21 @@ def test_cyclic_nodes_accepts_precomputed_closure(spark):
     assert got == {"a", "b"}
 
 
+def test_transitive_closure_warns_when_truncated(spark):
+    import warnings
+
+    from phenobert_spark.operators.closure import transitive_closure
+
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(8)], "child string, parent string"
+    )
+    with pytest.warns(RuntimeWarning, match="max_iters=2"):
+        assert transitive_closure(edges, max_iters=2).count() < 36
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", "transitive_closure", RuntimeWarning)
+        assert transitive_closure(edges).count() == 36
+
+
 def _scc_ref(edges):
     """Driver-side Tarjan reference: node -> min-id of its SCC."""
     import sys
