@@ -13,9 +13,12 @@
 * ``SearchIndex``    — reference gene_reviews_search_engine.py:8-46:
   inverted hpo -> documents index with boolean AND/OR queries.
 
-Same engine underneath: these wrappers build one-row / small DataFrames
-and run the identical pipeline — there is no second code path (the
-reference shares this property: its API calls the same functions).
+Same engine underneath: ``annotate_text`` runs the identical pipeline
+on a one-row DataFrame; ``link_phrases`` probes the same per-tier
+dictionary table the candidate kernel probes (``Ontology.dict_probe``,
+built from the config's tiers) on the driver and sends only the misses
+through the model stages (the reference shares this property: its API
+calls the same functions).
 """
 
 from __future__ import annotations
@@ -64,8 +67,9 @@ def link_phrases(
 ) -> list[tuple[str, str]]:
     """Entity-linking core (E3): each phrase -> (phrase, hpo_id|'None').
 
-    Dictionary tiers first; misses go through the model-analog stages
-    (the reference's CNN->BERT path, api.py:69-124)."""
+    Dictionary tiers first (``cfg``'s tiers, probed on the driver with
+    no Spark job); misses go through the model-analog stages (the
+    reference's CNN->BERT path, api.py:69-124)."""
     from .functions.normalize import (
         lemma_key_of,
         process_str,
@@ -73,31 +77,32 @@ def link_phrases(
         sorted_bag_key,
         stem_key_of,
     )
-    from .operators.dict_link import dictionary_link
 
     onto = onto or get_ontology()
-    rows = []
+    probe = onto.dict_probe(
+        cfg.syn_tier_min_count, cfg.syn_phrase_min_count, cfg.drop_one_dict
+    )
+    hits: dict[int, str] = {}
+    misses = []
     for i, p in enumerate(phrases):
         toks = simplify_tokens(process_str(p)) or process_str(p)
         key = sorted_bag_key(toks)
-        rows.append(
-            (str(i), 0, len(p), p, key, lemma_key_of(key), stem_key_of(toks),
-             len(toks), False)
-        )
-    cand = spark.createDataFrame(
-        rows,
-        "doc_id string, start int, end int, mention string, key string, "
-        "lemma_key string, stem_key string, n_tokens int, negated boolean",
-    )
-    linked = dictionary_link(cand, onto.dict_df(spark))
-    hits = {int(r.doc_id): r.hpo_id for r in linked.filter("hpo_id is not null").collect()}
-    if cfg.use_model_stages:
-        misses = linked.filter("hpo_id is null").drop("hpo_id", "score")
-        if misses.take(1):
-            from .linking.infer import model_link
+        keys = (key, lemma_key_of(key), stem_key_of(toks))
+        hit = probe(keys)
+        if hit is not None:
+            hits[i] = hit[0]
+        else:
+            misses.append((str(i), 0, len(p), p, *keys, len(toks), False))
+    if cfg.use_model_stages and misses:
+        from .linking.infer import model_link
 
-            for r in model_link(spark, misses, onto, cfg).collect():
-                hits[int(r.doc_id)] = r.hpo_id
+        cand = spark.createDataFrame(
+            misses,
+            "doc_id string, start int, end int, mention string, key string, "
+            "lemma_key string, stem_key string, n_tokens int, negated boolean",
+        )
+        for r in model_link(spark, cand, onto, cfg).collect():
+            hits[int(r.doc_id)] = r.hpo_id
     return [(p, hits.get(i, "None")) for i, p in enumerate(phrases)]
 
 

@@ -111,9 +111,15 @@ def run_with_checkpoint(
       after the triples job commits. A crash between the two leaves
       buckets without manifest rows -> they are reprocessed and their
       partitions overwritten; never double-counted.
-    * **Manifest from one aggregation** of the persisted input plus one
-      partition-pruned count of exactly the batch's output partitions —
-      never a rescan of the whole triples dir.
+    * **One writer task per bucket**: the batch's triples are
+      hash-repartitioned on ``bucket`` into ``min(len(batch),
+      spark.sql.shuffle.partitions)`` partitions, so the write runs
+      that many tasks in parallel and every ``bucket=`` directory holds
+      exactly one file.
+    * **Manifest without a read-back**: ``n_docs``/``doc_xor`` come
+      from one aggregation of the persisted input, ``n_triples`` from a
+      per-bucket count of the persisted (cached) triples that the write
+      then consumes — the written output is never scanned again.
     """
     done = completed_buckets(spark, out_dir)
     pending = [b for b in range(n_buckets) if b not in done]
@@ -131,6 +137,7 @@ def run_with_checkpoint(
             F.col("bucket").isin(batch)
         )
         part = part.persist(StorageLevel.MEMORY_AND_DISK)
+        triples = None
         try:
             stats = {
                 r.bucket: (r.n_docs, int(r.doc_xor or 0))
@@ -138,9 +145,24 @@ def run_with_checkpoint(
                 .agg(F.count("*").alias("n_docs"), _doc_xor().alias("doc_xor"))
                 .collect()
             }
-            triples = annotate(spark, part.drop("bucket"), onto, cfg).withColumn(
-                "bucket", bucket_of(F.col("doc_id"), n_buckets)
+            # one task per bucket: each bucket= directory gets exactly
+            # one file, and the write runs min(batch, shuffle partitions)
+            # tasks wide instead of AQE-coalesced into one
+            n_parts = min(
+                len(batch), int(spark.conf.get("spark.sql.shuffle.partitions"))
             )
+            triples = (
+                annotate(spark, part.drop("bucket"), onto, cfg)
+                .withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+                .repartition(n_parts, "bucket")
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            n_triples = {
+                r.bucket: r.n
+                for r in triples.groupBy("bucket")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            }
             # Clear any partial output from a crashed prior attempt for
             # buckets that would otherwise emit zero rows this run
             # (dynamic overwrite only touches partitions present in the
@@ -156,17 +178,10 @@ def run_with_checkpoint(
                 )
             finally:
                 spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-            # partition-pruned: reads only the batch's bucket= dirs
-            n_triples = {
-                r.bucket: r.n
-                for r in spark.read.parquet(triples_dir)
-                .filter(F.col("bucket").isin(batch))
-                .groupBy("bucket")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
         finally:
             part.unpersist()
+            if triples is not None:
+                triples.unpersist()
         wall = round(time.time() - t0, 3) or 0.001
         manifest_rows = spark.createDataFrame(
             [

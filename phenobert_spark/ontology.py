@@ -398,42 +398,32 @@ class Ontology:
         cached[ck] = pv
         return pv
 
-    # -- Spark views ---------------------------------------------------------
-
-    def dict_df(
+    def dict_rows(
         self,
-        spark: SparkSession,
         syn_min_count: int | None = None,
         syn_phrase_min_count: int | None = None,
         drop_one: bool = False,
-    ) -> DataFrame:
-        """The broadcast dictionary dimension for the J1 equi-join.
+    ) -> list[tuple[str, str, int]]:
+        """The dictionary tier rows ``(key, hpo_id, prio)`` (prio 0 =
+        strict key, 1 = simplified or folded-lemma key, 2 = stem key,
+        3 = split/synonym variant, 4 = drop-one variant), built once per
+        threshold triple.
 
-        One row per unique key; strict keys win over simplified keys,
-        later insertions win within a priority class (dict-overwrite
-        semantics of util.py:324-327).
+        Prio 0/1 hold one row per key; strict keys win over simplified
+        keys, later insertions win within a priority class (dict-
+        overwrite semantics of util.py:324-327).
 
         ``syn_min_count``: when set, adds prio-3 rows — single-token
         synonym substitutions of every key in LEMMA space (probed by the
-        candidates' existing lemma_key column), using pairs mined by
-        :meth:`synonym_pairs`. Variants that collide with the existing
-        lemma probe space or map ambiguously to several concepts are
-        dropped.
+        candidates' lemma_key), using pairs mined by
+        :meth:`mined_substitutions`. Variants that collide with the
+        existing lemma probe space or map ambiguously to several
+        concepts are dropped. ``drop_one``: adds the prio-4 rows.
         """
-        # Two cache layers: the built pandas frame (per substitution
-        # key) and the session-bound DataFrame (skips the repeat Arrow
-        # conversion — a DataFrame is just a plan, safe to reuse within
-        # its session).
-        df_cache = self.__dict__.setdefault("_dict_df_cache", {})
-        cache = self.__dict__.setdefault("_dict_pdf_cache", {})
+        cache = self.__dict__.setdefault("_dict_rows_cache", {})
         ck = (syn_min_count, syn_phrase_min_count, drop_one)
-        sk = (id(spark._jsparkSession), ck)
-        if sk in df_cache:
-            return df_cache[sk]
         if ck in cache:
-            df = spark.createDataFrame(cache[ck], DICT_SCHEMA)
-            df_cache[sk] = df
-            return df
+            return cache[ck]
         from .functions.normalize import lemma
 
         def lbag_key(toks: list[str]) -> str:
@@ -571,17 +561,53 @@ class Ontology:
                 win = unique_best(hpos)
                 if win is not None and v not in lemma_space:
                     rows.append((v, win, 4))
-        # Arrow path: ~95-150k-row driver-side dimension; plain
-        # createDataFrame(list-of-tuples) costs seconds per call. The
-        # built frame is cached per (syn, phrase) key so repeat
-        # annotate() calls skip variant regeneration entirely.
-        import pandas as pd
+        cache[ck] = rows
+        return rows
 
-        pdf = pd.DataFrame(rows, columns=["key", "hpo_id", "prio"])
-        cache[ck] = pdf
-        df = spark.createDataFrame(pdf, DICT_SCHEMA)
-        df_cache[sk] = df
-        return df
+    def dict_probe(
+        self,
+        syn_min_count: int | None = None,
+        syn_phrase_min_count: int | None = None,
+        drop_one: bool = False,
+    ) -> "DictProbe":
+        """The per-tier ``key -> hpo_id`` probe table of the same rows
+        (operators/dict_link.DictProbe), with the tiers a pipeline
+        configured this way probes; cached per threshold triple."""
+        from .operators.dict_link import DictProbe
+
+        cache = self.__dict__.setdefault("_dict_probe_cache", {})
+        ck = (syn_min_count, syn_phrase_min_count, drop_one)
+        if ck not in cache:
+            cache[ck] = DictProbe(
+                self.dict_rows(*ck),
+                has_syn_tier=syn_min_count is not None,
+                has_drop_one=drop_one,
+            )
+        return cache[ck]
+
+    # -- Spark views ---------------------------------------------------------
+
+    def dict_df(
+        self,
+        spark: SparkSession,
+        syn_min_count: int | None = None,
+        syn_phrase_min_count: int | None = None,
+        drop_one: bool = False,
+    ) -> DataFrame:
+        """The dictionary dimension ``(key, hpo_id, prio)`` as a
+        DataFrame: a view of :meth:`dict_rows`, cached per session (a
+        DataFrame is just a plan, safe to reuse within its session). It
+        goes through pandas/Arrow: createDataFrame over the ~100k-tuple
+        list itself costs seconds per call."""
+        df_cache = self.__dict__.setdefault("_dict_df_cache", {})
+        ck = (syn_min_count, syn_phrase_min_count, drop_one)
+        sk = (id(spark._jsparkSession), ck)
+        if sk not in df_cache:
+            import pandas as pd
+
+            pdf = pd.DataFrame(self.dict_rows(*ck), columns=["key", "hpo_id", "prio"])
+            df_cache[sk] = spark.createDataFrame(pdf, DICT_SCHEMA)
+        return df_cache[sk]
 
     def terms_df(self, spark: SparkSession) -> DataFrame:
         alt_by_canon: dict[str, list[str]] = {}

@@ -21,7 +21,10 @@ Pipeline per chunk (all offsets index the raw ``content``):
 6. simplification (num->word, drop stopwords/numbers, util.py:239-252),
 7. k-mer enumeration, k<=10, singleton stopword/number k-mers dropped
    (util.py:999-1014),
-8. dictionary keys: sorted-bag key + lemma fallback key (util.py:409-421).
+8. dictionary keys: sorted-bag key + lemma fallback key (util.py:409-421)
+   + stem key; with a probe broadcast, every dictionary tier is
+   resolved right here (operators/dict_link.DictProbe) and unmatched
+   k-mers are dropped unless a later stage asks for them.
 
 Scale: this is the dominant narrow stage. It runs after the skew
 chunker (corpus.chunked), so per-task work is bounded by
@@ -39,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
+    DoubleType,
     IntegerType,
     StringType,
     StructField,
@@ -272,20 +276,40 @@ def candidates_of_text(
 
 
 def generate_candidates(
-    chunks: DataFrame, max_kmer_len: int = 10, vocab_bc=None, gate_bc=None
+    chunks: DataFrame,
+    max_kmer_len: int = 10,
+    vocab_bc=None,
+    gate_bc=None,
+    probe_bc=None,
+    keep_misses: bool = False,
 ) -> DataFrame:
     """chunks(doc_id, chunk_id, chunk_start, chunk_text) -> candidates DF.
 
     ``vocab_bc``: optional ``sc.broadcast(frozenset)`` of dictionary
     vocabulary tokens for exact candidate pruning (see
     candidates_of_text). ``gate_bc``: optional broadcast head-token set
-    for the F7 substitute clause gate."""
+    for the F7 substitute clause gate.
+
+    ``probe_bc``: optional broadcast ``DictProbe``; the output then
+    carries the linked ``hpo_id`` and ``score`` (the columns
+    ``dictionary_link`` appends) and holds only matched rows, or also
+    the misses with a NULL ``hpo_id`` when ``keep_misses``."""
+    cols = list(CANDIDATES_SCHEMA.names)
+    schema = CANDIDATES_SCHEMA
+    if probe_bc is not None:
+        cols += ["hpo_id", "score"]
+        schema = StructType(
+            CANDIDATES_SCHEMA.fields
+            + [
+                StructField("hpo_id", StringType(), True),
+                StructField("score", DoubleType(), True),
+            ]
+        )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vocab = vocab_bc.value if vocab_bc is not None else None
         gate = gate_bc.value if gate_bc is not None else None
-        cols = ["doc_id", "start", "end", "mention", "key", "lemma_key",
-                "stem_key", "n_tokens", "negated", "gappy"]
+        probe = probe_bc.value if probe_bc is not None else None
         for pdf in batches:
             rows: list[tuple] = []
             for doc_id, cstart, ctext in zip(
@@ -298,9 +322,16 @@ def generate_candidates(
                     vocab=vocab,
                     gate_vocab=gate,
                 ):
-                    rows.append((doc_id, *cand))
+                    if probe is None:
+                        rows.append((doc_id, *cand))
+                        continue
+                    hit = probe(cand[3:6])
+                    if hit is not None:
+                        rows.append((doc_id, *cand, *hit))
+                    elif keep_misses:
+                        rows.append((doc_id, *cand, None, None))
             yield pd.DataFrame(rows, columns=cols)
 
     return chunks.select(
         "doc_id", "chunk_start", "chunk_text"
-    ).mapInPandas(gen, CANDIDATES_SCHEMA)
+    ).mapInPandas(gen, schema)

@@ -1,29 +1,97 @@
 """Step-1 dictionary entity linking (SURVEY.md §2.3 J1; reference
 ``matchPhrase2HPO`` util.py:409-421 applied at util.py:1044-1052).
 
-Tiered broadcast hash joins against the ontology surface-form
-dimension, highest priority wins via ``coalesce``:
+A candidate probes the ontology surface-form dimension tier by tier;
+the first tier holding its key wins (:data:`TIERS`):
 
-1. exact sorted-bag key (score 1.0),
-2. lemma/orthography-folded key for the misses (score 1.0),
-3. mined+seeded synonym-variant keys in lemma space (score 0.9;
-   present when the syn tier is enabled),
-4. stemmed-key tier (score 0.85; morphological-variant extension
-   beyond the reference — ranked below the syn tier because stem
-   matches are unvalidated suffix surgery, see dictionary_link),
-5. dictionary-side drop-one variants (score 0.8; default-off).
+1. strict: exact sorted-bag key against prio-0/1 rows (score 1.0),
+2. lemma: lemma/orthography-folded key for the misses (score 1.0),
+3. syn: mined+seeded synonym-variant and combining-form split keys in
+   lemma space (prio 3, score 0.9; probed only when the syn tier is
+   enabled),
+4. stem: stemmed key against prio-2 rows (score 0.85; morphological-
+   variant extension beyond the reference, ranked below the syn tier —
+   a stem match is unvalidated suffix surgery: "limbic"/"limb" both
+   stem to "limb"),
+5. drop_one: dictionary-side drop-one variants (prio 4, score 0.8;
+   default-off).
 
-Tiers 4/5 are skipped entirely — no join in the plan — when their
-rows are absent (``has_syn_tier`` / ``has_drop_one``). The dictionary
-is ~50-150k rows depending on tiers (BASELINE.md) — a textbook
-broadcast dimension; every join is a BroadcastHashJoin with zero
-shuffle. Exact/lemma matches carry score 1.0 (util.py:1052).
+Two forms read the same table. :class:`DictProbe` is the kernel form:
+``annotate()`` ships it as one broadcast and the candidate
+``mapInPandas`` resolves every tier per row, so unmatched candidates
+never leave the kernel. :func:`dictionary_link` is the join form: one
+broadcast hash join per tier over the ~50-150k-row dictionary
+(BASELINE.md). It is the equivalence oracle of the kernel form and the
+layer the per-layer benchmark split composes.
 """
 
 from __future__ import annotations
 
+from typing import Iterable, NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+class Tier(NamedTuple):
+    name: str
+    prios: tuple[int, ...]  # dictionary rows (``prio`` column) in the tier
+    column: str             # candidate key column that probes it
+    score: float
+
+
+# Priority order: a candidate links through the first tier holding its key.
+TIERS = (
+    Tier("strict", (0, 1), "key", 1.0),
+    Tier("lemma", (0, 1), "lemma_key", 1.0),
+    Tier("syn", (3,), "lemma_key", 0.9),
+    Tier("stem", (2,), "stem_key", 0.85),
+    Tier("drop_one", (4,), "lemma_key", 0.8),
+)
+PROBE_COLUMNS = ("key", "lemma_key", "stem_key")
+
+
+def active_tiers(has_syn_tier: bool, has_drop_one: bool) -> list[Tier]:
+    """The probed tiers: ``syn`` only with the syn tier on (its split-
+    variant rows exist either way), ``drop_one`` only with the
+    dictionary-side drop-one rows built."""
+    on = {"syn": has_syn_tier, "drop_one": has_drop_one}
+    return [t for t in TIERS if on.get(t.name, True)]
+
+
+class DictProbe:
+    """Picklable kernel form of :func:`dictionary_link`: per active tier,
+    a ``key -> hpo_id`` dict. Where a tier holds a key twice (a split
+    and a synonym variant of different concepts) the smallest hpo_id is
+    kept — the row the join form's identical-span dedup keeps. Tiers
+    over the same rows share one dict."""
+
+    def __init__(
+        self,
+        rows: Iterable[tuple[str, str, int]],
+        has_syn_tier: bool = True,
+        has_drop_one: bool = True,
+    ):
+        tiers = active_tiers(has_syn_tier, has_drop_one)
+        tables: dict[tuple[int, ...], dict[str, str]] = {t.prios: {} for t in tiers}
+        for key, hpo, prio in rows:
+            for prios, table in tables.items():
+                if prio in prios:
+                    old = table.get(key)
+                    if old is None or hpo < old:
+                        table[key] = hpo
+        self.tiers = [
+            (PROBE_COLUMNS.index(t.column), t.score, tables[t.prios]) for t in tiers
+        ]
+
+    def __call__(self, keys: tuple[str, str, str]) -> tuple[str, float] | None:
+        """``keys`` = (key, lemma_key, stem_key) -> (hpo_id, score) of
+        the first tier that holds its key, or None."""
+        for col, score, table in self.tiers:
+            hpo = table.get(keys[col])
+            if hpo is not None:
+                return hpo, score
+        return None
 
 
 def dictionary_link(
@@ -32,75 +100,28 @@ def dictionary_link(
     has_syn_tier: bool = True,
     has_drop_one: bool = True,
 ) -> DataFrame:
-    """candidates(key, lemma_key, ...) x dict(key, hpo_id, prio) ->
-    + columns (hpo_id nullable, score nullable).
+    """candidates(key, lemma_key, stem_key, ...) x dict(key, hpo_id,
+    prio) -> + columns (hpo_id nullable, score nullable).
 
-    A key can appear once in dict_df (unique by construction). The
-    strict-key match wins; lemma-key match fills the misses — the exact
-    composition of the reference's two-probe lookup.
-
-    ``has_syn_tier`` / ``has_drop_one``: whether dict_df carries prio-3 /
-    prio-4 rows. False skips that broadcast join entirely (probing an
-    empty broadcast relation is not free at 10^12 rows).
+    One broadcast left join per active tier; ``coalesce`` over the
+    tiers in :data:`TIERS` order picks the winner. ``has_syn_tier`` /
+    ``has_drop_one``: whether the syn / drop-one tiers are probed;
+    False leaves that join out of the plan.
     """
-    d1 = F.broadcast(
-        dict_df.filter(F.col("prio") <= 1).select(
-            F.col("key").alias("_k1"), F.col("hpo_id").alias("_h1")
-        )
-    )
-    d2 = F.broadcast(
-        dict_df.filter(F.col("prio") <= 1).select(
-            F.col("key").alias("_k2"), F.col("hpo_id").alias("_h2")
-        )
-    )
-    d3 = F.broadcast(
-        dict_df.filter(F.col("prio") == 2).select(
-            F.col("key").alias("_k3"), F.col("hpo_id").alias("_h3")
-        )
-    )
-    out = (
-        candidates.join(d1, F.col("key") == F.col("_k1"), "left")
-        .join(d2, F.col("lemma_key") == F.col("_k2"), "left")
-        .join(d3, F.col("stem_key") == F.col("_k3"), "left")
-    )
-    drop_cols = ["_k1", "_h1", "_k2", "_h2", "_k3", "_h3"]
-    hpo_tiers = [F.col("_h1"), F.col("_h2")]
-    score = F.when(
-        F.coalesce(F.col("_h1"), F.col("_h2")).isNotNull(), F.lit(1.0)
-    )
-    if has_syn_tier:
-        # prio 3: synonym-substituted variant keys in lemma space (mined
-        # from same-concept surface forms + seeded anatomical pairs) —
-        # probed by the same lemma_key column, one more broadcast join.
-        # Ranked ABOVE the stem tier: a mined swap keeps exact lemma
-        # tokens and is validated by >=10 same-concept co-variations,
-        # while a stem match is unvalidated suffix surgery that can
-        # conflate distinct lexemes ("limbic"/"limb" both stem to
-        # "limb", so "limb malformation" would false-hit "limbic
-        # malformation" HP:0007343 if the stem tier won).
-        d4 = F.broadcast(
-            dict_df.filter(F.col("prio") == 3).select(
-                F.col("key").alias("_k4"), F.col("hpo_id").alias("_h4")
+    out = candidates
+    hpo_tiers, score, drop_cols = [], None, []
+    for i, t in enumerate(active_tiers(has_syn_tier, has_drop_one)):
+        k, h = f"_k{i}", f"_h{i}"
+        d = F.broadcast(
+            dict_df.filter(F.col("prio").isin(*t.prios)).select(
+                F.col("key").alias(k), F.col("hpo_id").alias(h)
             )
         )
-        out = out.join(d4, F.col("lemma_key") == F.col("_k4"), "left")
-        drop_cols += ["_k4", "_h4"]
-        hpo_tiers.append(F.col("_h4"))
-        score = score.when(F.col("_h4").isNotNull(), F.lit(0.9))
-    hpo_tiers.append(F.col("_h3"))
-    score = score.when(F.col("_h3").isNotNull(), F.lit(0.85))
-    if has_drop_one:
-        # prio 4: dictionary-side drop-one variants (Ontology.dict_df
-        # drop_one=True).
-        d5 = F.broadcast(
-            dict_df.filter(F.col("prio") == 4).select(
-                F.col("key").alias("_k5"), F.col("hpo_id").alias("_h5")
-            )
-        )
-        out = out.join(d5, F.col("lemma_key") == F.col("_k5"), "left")
-        drop_cols += ["_k5", "_h5"]
-        hpo_tiers.append(F.col("_h5"))
-        score = score.when(F.col("_h5").isNotNull(), F.lit(0.8))
+        out = out.join(d, F.col(t.column) == F.col(k), "left")
+        hit = F.col(h).isNotNull()
+        score = F.when(hit, t.score) if score is None else score.when(hit, t.score)
+        hpo_tiers.append(F.col(h))
+        drop_cols += [k, h]
     return (
         out.withColumn("hpo_id", F.coalesce(*hpo_tiers))
         .withColumn("score", score.cast("double"))

@@ -7,11 +7,17 @@ Physical plan (two shuffles total on the hot path, SURVEY.md §4):
       -> doc_id = sha2(content)                       [narrow]
       -> skew chunker                                 [narrow]
       -> repartition(doc_id, chunk_id)                [shuffle 1: salt]
-      -> candidate mapInPandas (Arrow)                [narrow]
-      -> broadcast dict joins (J1)                    [no shuffle]
+      -> candidate mapInPandas (Arrow) + broadcast
+         dictionary probe, all tiers (J1)             [narrow]
       -> (optional model stages, pandas UDFs)         [narrow]
       -> window dedup + maximal spans (J4)            [shuffle 2: doc_id]
+      -> alt-id canonicalize (broadcast join)         [no shuffle]
       -> triples
+
+The dictionary is probed inside the candidate kernel, so only matched
+k-mers leave it (plus the misses, when the model or query-side drop-one
+stages need them); ``operators/dict_link.dictionary_link`` is the
+equivalent join form.
 """
 
 from __future__ import annotations
@@ -24,7 +30,6 @@ from .config import PipelineConfig
 from .corpus import chunked, with_doc_id
 from .ontology import Ontology
 from .operators.candidates import generate_candidates
-from .operators.dict_link import dictionary_link
 from .operators.spans import (
     keep_maximal_spans,
     suppress_contained_in,
@@ -58,7 +63,6 @@ def annotate(
     docs: DataFrame,
     onto: Ontology,
     cfg: PipelineConfig = PipelineConfig(),
-    dict_df: DataFrame | None = None,
     vocab_bc=None,
 ) -> DataFrame:
     """documents(repo, path, commit, lang, content) -> triples DF.
@@ -75,68 +79,47 @@ def annotate(
     )
     chunks = chunks.repartition(nparts, "doc_id", "chunk_id")
 
+    # Broadcast cache: the broadcast objects are built once and cached on
+    # the ontology, but sc.broadcast() re-serializes and re-ships them on
+    # every call — repeated invocations (bench loops, notebook sessions)
+    # reuse a broadcast while the same SparkContext is alive (keyed by
+    # applicationId).
+    bc_cache = onto.__dict__.setdefault("_vocab_bc_cache", {})
+    app = spark.sparkContext.applicationId
+
+    def broadcast(key: tuple, build):
+        bc = bc_cache.get((app, *key))
+        if bc is None:
+            bc = bc_cache[(app, *key)] = spark.sparkContext.broadcast(build())
+        return bc
+
+    syn = (cfg.syn_tier_min_count, cfg.syn_phrase_min_count)
     # Exact candidate pruning: k-mers with out-of-vocabulary tokens are
     # provable dictionary misses (~20-50x fewer candidate rows). The
-    # model stages want the over-generated set, so pruning is off there.
+    # model stages want the over-generated set, so they get a relaxed
+    # predicate that keeps morphological variants for the fuzzy model
+    # stage (prefix-5 / lemma adjacency).
     if vocab_bc is None and cfg.vocab_prune:
-        # broadcast cache: the vocab object itself is already cached on
-        # the ontology, but sc.broadcast() re-serializes and re-ships it
-        # on every annotate() call — repeated invocations (bench loops,
-        # notebook sessions) reuse the broadcast as long as the same
-        # SparkContext is alive (keyed by applicationId)
-        bc_cache = onto.__dict__.setdefault("_vocab_bc_cache", {})
-        bk = (
-            spark.sparkContext.applicationId,
-            cfg.use_model_stages,
-            cfg.syn_tier_min_count,
-            cfg.syn_phrase_min_count,
-        )
-        vocab_bc = bc_cache.get(bk)
-        if vocab_bc is None:
-            if cfg.use_model_stages:
-                # relaxed predicate: keep morphological variants for the
-                # fuzzy model stage (prefix-5 / lemma adjacency)
-                from .linking.models import RelaxedVocab
+        if cfg.use_model_stages:
+            from .linking.models import RelaxedVocab
 
-                vocab_bc = spark.sparkContext.broadcast(
-                    RelaxedVocab(onto.vocab())
-                )
-            else:
-                vocab_bc = spark.sparkContext.broadcast(
-                    onto.prune_vocab(
-                        syn_min_count=cfg.syn_tier_min_count,
-                        syn_phrase_min_count=cfg.syn_phrase_min_count,
-                    )
-                )
-            bc_cache[bk] = vocab_bc
+            vocab_bc = broadcast((True, *syn), lambda: RelaxedVocab(onto.vocab()))
+        else:
+            vocab_bc = broadcast((False, *syn), lambda: onto.prune_vocab(*syn))
     gate_bc = None
     if cfg.gate_max_df is not None:
-        bc_cache = onto.__dict__.setdefault("_vocab_bc_cache", {})
-        gk = (spark.sparkContext.applicationId, "gate", cfg.gate_max_df)
-        gate_bc = bc_cache.get(gk)
-        if gate_bc is None:
-            gate_bc = spark.sparkContext.broadcast(
-                onto.head_vocab(cfg.gate_max_df)
-            )
-            bc_cache[gk] = gate_bc
-    cands = generate_candidates(
-        chunks, cfg.max_kmer_len, vocab_bc=vocab_bc, gate_bc=gate_bc
-    )
-    dict_df = (
-        dict_df
-        if dict_df is not None
-        else onto.dict_df(
-            spark,
-            syn_min_count=cfg.syn_tier_min_count,
-            syn_phrase_min_count=cfg.syn_phrase_min_count,
-            drop_one=cfg.drop_one_dict,
+        gate_bc = broadcast(
+            ("gate", cfg.gate_max_df), lambda: onto.head_vocab(cfg.gate_max_df)
         )
-    )
-    linked = dictionary_link(
-        cands,
-        dict_df,
-        has_syn_tier=cfg.syn_tier_min_count is not None,
-        has_drop_one=cfg.drop_one_dict,
+    tiers = (*syn, cfg.drop_one_dict)
+    probe_bc = broadcast(("probe", *tiers), lambda: onto.dict_probe(*tiers))
+    linked = generate_candidates(
+        chunks,
+        cfg.max_kmer_len,
+        vocab_bc=vocab_bc,
+        gate_bc=gate_bc,
+        probe_bc=probe_bc,
+        keep_misses=cfg.use_model_stages or cfg.drop_one_query,
     )
 
     matched = linked.filter(F.col("hpo_id").isNotNull())
@@ -150,7 +133,9 @@ def annotate(
         droppable_df = spark.createDataFrame(
             [(t,) for t in sorted(DROPPABLE_MODIFIERS)], "token string"
         )
-        fuzzy = drop_one_link(fuzzy_misses, dict_df, droppable_df)
+        fuzzy = drop_one_link(
+            fuzzy_misses, onto.dict_df(spark, *tiers), droppable_df
+        )
         matched = matched.unionByName(fuzzy.select(*matched.columns))
 
     if cfg.use_model_stages:

@@ -1061,13 +1061,13 @@ def _pinned(name: str) -> str:
 @register("q90_hpo_pipeline_fixture", _pinned("Q90_FIXTURE_PIPELINE_ORACLE"))
 def q90(spark, sf_dir):
     """Full KG pipeline on the deterministic fixture corpus (pandas-UDF
-    candidate generation + broadcast dict join + window dedup). Not
-    SQL-expressible end-to-end, but the fixture corpus is seed-fixed and
-    input-independent, so the exact 176-row output is pinned as a
-    literal VALUES oracle (tools/pin_oracles.py) — the driver
-    hash-checks every mention, offset, concept, score and negation flag
-    instead of a rows-only count. pytest additionally covers P/R=1.0 vs
-    generated gold."""
+    candidate generation with the in-kernel dictionary probe + window
+    dedup). Not SQL-expressible end-to-end, but the fixture corpus is
+    seed-fixed and input-independent, so the exact 176-row output is
+    pinned as a literal VALUES oracle (tools/pin_oracles.py) — the
+    driver hash-checks every mention, offset, concept, score and
+    negation flag instead of a rows-only count. pytest additionally
+    covers P/R=1.0 vs generated gold."""
     from ..config import PipelineConfig
     from ..corpus import synthesize_corpus
     from ..ontology import fixture_ontology

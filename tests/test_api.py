@@ -45,6 +45,18 @@ def test_link_phrases(spark, onto):
     assert got[2][1] == "None"
 
 
+def test_link_phrases_uses_config_tiers(spark, onto):
+    """The phrase linker probes the tiers its config enables: the syn
+    tier (on by default) links the substituted phrase as annotate_text
+    does."""
+    cfg = PipelineConfig(use_model_stages=False)
+    phrase = "body change height"
+    assert link_phrases(spark, [phrase], onto, cfg) == [(phrase, "HP:0000002")]
+    assert "\tHP:0000002\t0.90" in annotate_text(spark, phrase, onto, cfg)
+    no_syn = PipelineConfig(use_model_stages=False, syn_tier_min_count=None)
+    assert link_phrases(spark, [phrase], onto, no_syn) == [(phrase, "None")]
+
+
 def test_export_reference_tsv(spark, onto, tmp_path):
     docs, _ = synthesize_corpus(spark, onto, n_docs=4)
     triples = annotate(spark, docs, onto, PipelineConfig())

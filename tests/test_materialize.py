@@ -1,5 +1,7 @@
 """Checkpoint / lineage / resume (north rule resumability)."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -79,6 +81,47 @@ def test_manifest_metrics(spark, onto, corpus, tmp_path):
     assert sum(r.n_docs for r in rows) == 24
     assert all(r.wall_sec > 0 for r in rows)
     assert sum(r.n_triples for r in rows) == read_triples(spark, out).count()
+
+
+def _assert_bucket_files(spark, out):
+    """Per bucket, the manifest's n_triples equals the rows of its
+    bucket= directory on disk, and a non-empty bucket directory holds
+    exactly one parquet file."""
+    tdir = os.path.join(out, "triples")
+    on_disk = {}
+    for d in os.listdir(tdir):
+        if d.startswith("bucket="):
+            path = os.path.join(tdir, d)
+            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            assert len(files) == 1, (d, files)
+            on_disk[int(d.split("=")[1])] = spark.read.parquet(path).count()
+    rows = read_manifest(spark, out).collect()
+    manifest = {r.bucket: r.n_triples for r in rows}
+    assert len(manifest) == len(rows)  # one manifest row per bucket
+    assert set(on_disk) <= set(manifest)
+    assert {b: on_disk.get(b, 0) for b in manifest} == manifest
+
+
+def test_manifest_counts_match_bucket_files(spark, onto, corpus, tmp_path):
+    """A fresh run and a crash-then-resume run: per-bucket counts match
+    the files on disk, and both end with the same manifest lineage."""
+
+    def lineage(out):
+        return sorted(
+            (r.bucket, r.n_docs, r.n_triples, r.doc_xor)
+            for r in read_manifest(spark, out).collect()
+        )
+
+    fresh = str(tmp_path / "fresh")
+    run_with_checkpoint(spark, corpus, onto, fresh, n_buckets=8)
+    _assert_bucket_files(spark, fresh)
+    assert sum(row[2] for row in lineage(fresh)) > 0
+    resumed = str(tmp_path / "resumed")
+    run_with_checkpoint(spark, corpus, onto, resumed, n_buckets=8, fail_after_buckets=3)
+    _assert_bucket_files(spark, resumed)
+    run_with_checkpoint(spark, corpus, onto, resumed, n_buckets=8)
+    _assert_bucket_files(spark, resumed)
+    assert lineage(resumed) == lineage(fresh)
 
 
 def test_node_tables(spark, onto, corpus, tmp_path):
